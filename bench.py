@@ -141,7 +141,7 @@ def _boot_and_warm():
     """Session boot + the full warmup protocol, shared by the in-process
     bench and the per-query isolated subprocesses."""
     import __spark_entry__ as entry
-    from imops_spark.session import get_spark
+    from imops_spark.session import get_spark, session_cpus
 
     spark = get_spark(app_name="imops_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -186,7 +186,7 @@ def _boot_and_warm():
 
         yield from batches
 
-    n_workers = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    n_workers = session_cpus()
     spark.range(n_workers * 10).repartition(n_workers).mapInPandas(
         _warm_py, "id long"
     ).count()
@@ -301,6 +301,8 @@ def main() -> None:
 def _report(
     passes: dict[str, list[float]], load_before: float, isolation: str
 ) -> None:
+    from imops_spark.session import session_cpus
+
     load_after = round(os.getloadavg()[0], 2)
 
     timings = {name: min(ts) for name, ts in passes.items()}
@@ -351,7 +353,7 @@ def _report(
                 # is honored by imops_spark.session.get_spark; printed so a
                 # cross-core-count comparison can verify both runs used the
                 # intended N.
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+                "cpus": session_cpus(),
                 # At sf0.1 every row is 0.1-4 s with min-of-passes: session,
                 # stage-scheduling and Python-boundary FIXED cost dominates,
                 # so 8-vs-32-core ratios on THIS data read ~1 regardless of

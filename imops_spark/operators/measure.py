@@ -22,6 +22,7 @@ from typing import Sequence
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..backend import dispatch_strategy, resolve_backend
@@ -174,8 +175,12 @@ def label_df(
         term = F.col(c).cast("long") * F.lit(stride)
         lin = term if lin is None else lin + term
 
+    df = tf.df
+    if isinstance(df.schema[VAL].dataType, T.BooleanType):
+        # a bool mask labels as 0/1 integers, like the ndarray label()
+        df = df.withColumn(VAL, F.col(VAL).cast("long"))
     fg = (
-        tf.df.filter(F.col(VAL) != F.lit(background))
+        df.filter(F.col(VAL) != F.lit(background))
         .select(IMAGE_ID, *tf.coords, VAL, lin.alias("node"))
     )
     fg = fg.localCheckpoint()

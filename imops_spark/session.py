@@ -15,11 +15,23 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "stop_spark", "session_cpus"]
 
 
-def _cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+def session_cpus() -> int:
+    """Core count of the local session: ``$SPARK_GRAFT_CPUS``, else all
+    cores.  A value that is not a positive integer raises ``ValueError``
+    naming the variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 4
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return n
 
 
 def get_spark(
@@ -29,7 +41,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Return (creating if needed) the engine SparkSession."""
-    cpus = _cpus()
+    cpus = session_cpus()
     # 8g fixed: GC logs across the full bench + oracle suite show a live
     # set of 82-252 MB after every full GC (the heap is allocation churn,
     # not retention), while the *growing* default heap wandered to 18 GB

@@ -220,8 +220,24 @@ def map_blobs(
     wrapped zero-copy into the output binary column (no pandas detour, no
     ``tobytes`` copy) — at 100 MB+ per image the serialization path, not
     the kernel, dominates, so every avoided copy counts.
+
+    Chained calls fuse: ``map_blobs(map_blobs(src, f), g)`` runs as ONE
+    ``mapInArrow`` over ``src`` applying ``f`` then ``g`` per image, so
+    each image crosses the JVM/Python-worker boundary once per chain
+    instead of once per step.  Between stages the intermediate is made
+    C-contiguous and read-only, which is exactly what the Arrow round
+    trip would have handed the next stage.  Fusion stops at any input
+    that did not come straight from ``map_blobs`` (``localCheckpoint``,
+    ``select``, ``edt_blobs``, a parquet read, ...) and at an input that
+    ``is_cached`` (``persist``/``cache``) — a persisted step is read from
+    its cache.  The decision is made at call time: persisting a DataFrame
+    AFTER a downstream ``map_blobs`` was built on it does not make that
+    downstream read the cache.
     """
-    schema = blob_schema()
+    # vars(), not getattr: DataFrame.__getattr__ resolves column names
+    # through the JVM on a miss
+    src, fns = (df, ()) if df.is_cached else vars(df).get("_blob_chain", (df, ()))
+    fns = fns + (fn,)
 
     def run(batches):
         import pyarrow as pa
@@ -232,8 +248,10 @@ def map_blobs(
                 shape = cols["shape"][k].as_py()
                 dt = np.dtype(cols["dtype"][k].as_py())
                 buf = cols["data"][k].as_buffer()  # zero-copy view of the blob
-                arr = np.frombuffer(buf, dtype=dt).reshape(shape)
-                res = np.ascontiguousarray(fn(arr))
+                res = np.frombuffer(buf, dtype=dt).reshape(shape)
+                for stage in fns:
+                    res = np.ascontiguousarray(stage(res)).view()
+                    res.flags.writeable = False
                 offsets = np.array([0, res.nbytes], dtype=np.int32)
                 data_arr = pa.Array.from_buffers(
                     pa.binary(), 1, [None, pa.py_buffer(offsets), pa.py_buffer(res)]
@@ -248,7 +266,9 @@ def map_blobs(
                     names=[IMAGE_ID, "shape", "dtype", "data"],
                 )
 
-    return df.mapInArrow(run, schema=schema)
+    out = src.mapInArrow(run, schema=blob_schema())
+    out._blob_chain = (src, fns)
+    return out
 
 
 def voxels_to_blobs(tf: TensorFrame, default: float | int | bool = 0) -> DataFrame:

@@ -1,15 +1,35 @@
 """Public-API parity: every name the reference exports must exist here.
 
-The reference's ``imops/__init__.py`` is PARSED (not imported — its compiled
-extensions aren't built in this container); every public exported name must
-resolve on ``imops_spark`` with the same callable/class nature, so a user's
-``from imops import X`` rewrites to ``from imops_spark import X`` verbatim.
+The reference's exported names are a committed fixture,
+``REFERENCE_EXPORTS``, so the test needs nothing outside the repo.  Where
+the reference checkout exists, its ``imops/__init__.py`` is also PARSED
+(not imported — its compiled extensions aren't built here) and must still
+equal the fixture.  Every name must resolve on ``imops_spark``, so a
+user's ``from imops import X`` rewrites to ``from imops_spark import X``
+verbatim.
 """
 
 import ast
+import os
 
 
 REF_INIT = "/root/reference/imops/__init__.py"
+
+# The public names of the reference's ``imops/__init__.py:1-10``, rebuilt
+# from SURVEY.md §2.1 rows 1-24: the operators defined in the modules that
+# file re-exports (zoom, interp1d, interp2d, morphology, measure, radon,
+# pad, crop, numeric).  Rows 25-32 (isin, mask_to_box, box algebra,
+# build_slices, label outputs, backend and thread control, testing
+# helpers) cite the reference's utils/box/backend/testing modules, which
+# the package root does not re-export.
+REFERENCE_EXPORTS = (
+    "zoom", "zoom_to_shape", "interp1d", "Linear2DInterpolator",
+    "binary_dilation", "binary_erosion", "binary_closing", "binary_opening",
+    "distance_transform_edt", "convex_hull_image", "label", "center_of_mass",
+    "radon", "inverse_radon", "pad", "pad_to_shape", "pad_to_divisible",
+    "restore_crop", "crop_to_shape", "crop_to_box", "pointwise_add", "fill_",
+    "full", "copy",
+)
 
 # names that are deliberately not mirrored, with the reason
 # __version__: our package carries its own; _zoom: private helper
@@ -17,7 +37,7 @@ REF_INIT = "/root/reference/imops/__init__.py"
 EXEMPT = {"__version__", "_zoom"}
 
 
-def _reference_exports():
+def _parse_reference_exports():
     tree = ast.parse(open(REF_INIT).read())
     names = []
     for node in ast.walk(tree):
@@ -30,7 +50,9 @@ def _reference_exports():
 def test_every_reference_export_resolves():
     import imops_spark as im
 
-    missing = [n for n in _reference_exports() if not hasattr(im, n)]
+    if os.path.exists(REF_INIT):
+        assert sorted(_parse_reference_exports()) == sorted(REFERENCE_EXPORTS)
+    missing = [n for n in REFERENCE_EXPORTS if not hasattr(im, n)]
     assert not missing, f"reference exports without a counterpart: {missing}"
 
 

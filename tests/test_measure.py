@@ -213,3 +213,20 @@ def test_connected_components_long_path_graph(spark):
             for r in connected_components_df(edf, driver_solve_threshold=thr).collect()
         }
         assert got == {i: 0 for i in range(400)}, thr
+
+
+@pytest.mark.parametrize("connectivity", [1, 2])
+def test_label_df_bool_mask_matches_label_numpy(spark, connectivity):
+    """A bool voxel table labels as its 0/1 integer image, like the
+    ndarray ``label()``; the background filter must not compare a boolean
+    column with an integer literal."""
+    from imops_spark.kernels import label_numpy
+    from imops_spark.operators.measure import label_df
+    from imops_spark.tensor_io import encode_volume
+
+    a = np.random.binomial(1, 0.4, (9, 10)).astype(bool)
+    out = label_df(encode_volume(spark, a), connectivity=connectivity).toPandas()
+    got = np.zeros(a.shape, dtype=np.int64)
+    got[out["i0"].to_numpy(), out["i1"].to_numpy()] = out["label"].to_numpy()
+    exp, _ = label_numpy(a, connectivity=connectivity)
+    assert_array_equal(got, exp)

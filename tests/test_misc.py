@@ -787,6 +787,7 @@ def test_bench_contention_stats_flags_loaded_run():
     import bench
 
     busy_load = (os.cpu_count() or 8) / 4.0  # comfortably past cores/8
+    idle_load = (os.cpu_count() or 8) / 16.0  # comfortably under cores/8
     # idle shape: steady passes repeat within noise; one GC-unlucky query
     # (1.6x) is normal and stays under the >=3-query threshold
     idle = {
@@ -816,7 +817,7 @@ def test_bench_contention_stats_flags_loaded_run():
 
     # the SAME spreads with an idle load stamp: JIT-mode flips, not an
     # outside process — must not frame the box
-    s = bench.contention_stats(loaded, load_before=0.5)
+    s = bench.contention_stats(loaded, load_before=idle_load)
     assert not s["contended"]
     assert s["n_queries_spread_gt_1p5"] >= 3  # the diagnostic stays visible
 
@@ -1331,3 +1332,20 @@ def test_daemon_module_is_passthrough_importable():
     from pyspark.daemon import manager
 
     assert d.manager is manager
+
+
+@pytest.mark.parametrize("raw", ["four", "", "0", "-2", "2.5"])
+def test_malformed_spark_graft_cpus_names_the_variable(monkeypatch, raw):
+    """A bad $SPARK_GRAFT_CPUS is one clear ValueError naming it, not a
+    bare int() error, wherever the core count is read (session, bench)."""
+    import os
+
+    from imops_spark.session import session_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session_cpus()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", " 3 ")
+    assert session_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert session_cpus() == (os.cpu_count() or 4)
